@@ -786,3 +786,249 @@ def test_crawl_delay_budgets_match_simulator(spark, tmp_path, crawl_world):
     assert max(delayed_hot) == 3          # floor(30/10), < budget 5
     # the delayed crawl is a different schedule from the canonical one
     assert visit_order(res.fetch_log) != crawl_world["order"]
+
+
+# ---------------------------------------------------------------------------
+# per-wave bookkeeping: counts observed on writes, one commit for the last
+# wave, the seed plan's single pass, and the per-wave Spark job floor
+# ---------------------------------------------------------------------------
+
+COUNT_FIELDS = ("n_frontier", "n_new", "n_admitted", "n_deferred", "n_entities")
+
+
+def _recount_waves(spark, res, seeds):
+    """Per-wave counts rebuilt from what the crawl persisted (fetch log,
+    entities log, seen-key appends), independent of the engine's own
+    bookkeeping. Wave w+1's frontier is wave w's deferred rows plus
+    discover() over wave w's entities log; wave w's deferred rows are the
+    distinct canon urls of its frontier that were neither seen before it
+    nor newly seen in it. Returns the per-wave counts and the canon urls
+    of the frontier after the last wave."""
+    import os
+
+    from wss_spark.crawl import checkpoint
+    from wss_spark.crawl.discover import discover
+
+    root = res.checkpoint_dir
+    log = res.fetch_log.select("wave", "canon_url", "status").collect()
+    front = [canonicalize(u) for u in seeds]
+    seen: set[str] = set()
+    out = []
+    for m in res.metrics:
+        w = m["wave"]
+        rows = [r for r in log if r["wave"] == w]
+        new = {r["canon_url"] for r in rows}
+        deferred = set(front) - seen - new
+        entities = checkpoint.read_log_wave(spark, root, "entities", w)
+        appended = spark.read.parquet(
+            os.path.join(root, "seen_keys", f"wave={w:05d}")).count()
+        assert appended == len(rows)  # the seen store got exactly n_new keys
+        out.append({
+            "n_frontier": len(front),
+            "n_new": len(rows),
+            "n_admitted": sum(r["status"] != 403 for r in rows),
+            "n_deferred": len(deferred),
+            "n_entities": entities.count(),
+        })
+        seen |= new
+        front = sorted(deferred) + [
+            r[0] for r in discover(entities).select("canon_url").collect()
+        ]
+    return out, front
+
+
+def _assert_metrics_exact(spark, res, seeds) -> list[str]:
+    """Observed metrics == counts recomputed from the persisted state; the
+    last snapshot and the metrics log agree. Returns the final frontier."""
+    from wss_spark.crawl import checkpoint
+
+    want, front = _recount_waves(spark, res, seeds)
+    assert [{k: m[k] for k in COUNT_FIELDS} for m in res.metrics] == want
+    root = res.checkpoint_dir
+    snap = checkpoint.latest_snapshot(root)
+    assert snap.wave == res.metrics[-1]["wave"]
+    assert snap.manifest["frontier_rows"] == len(front)
+    assert checkpoint.read_state(spark, root, snap.wave)[0].count() == len(front)
+    logged = sorted(
+        tuple(r) for r in checkpoint.read_log(spark, root, "metrics")
+        .select("wave", *COUNT_FIELDS).collect()
+    )
+    assert logged == [(m["wave"], *(m[k] for k in COUNT_FIELDS))
+                      for m in res.metrics]
+    return front
+
+
+def test_wave_metrics_exact_under_robots(spark, crawl_world):
+    """The canonical crawl: budget binds, robots blocks rows (n_new counts
+    them, n_admitted does not)."""
+    res = crawl_world["result"]
+    _assert_metrics_exact(spark, res, crawl_world["seeds"])
+    assert any(m["n_new"] > m["n_admitted"] for m in res.metrics)
+    assert any(m["n_deferred"] > 0 for m in res.metrics)
+
+
+def test_wave_metrics_exact_when_cut_off_cadence(spark, tmp_path, crawl_world):
+    """max_waves=2 with cadence 4: the last wave is off the cadence and
+    writes its snapshot itself."""
+    cfg = CrawlConfig(budget=BUDGET, n_buckets=N_BUCKETS, m_bits=M_BITS,
+                      max_waves=2, checkpoint_every=4,
+                      checkpoint_dir=str(tmp_path / "cut"))
+    res = run_crawl(spark, crawl_world["pages"], crawl_world["seeds"], cfg)
+    assert [m["wave"] for m in res.metrics] == [0, 1]
+    front = _assert_metrics_exact(spark, res, crawl_world["seeds"])
+    assert front  # the cut left work pending
+    assert any(m["n_deferred"] > 0 for m in res.metrics)
+
+
+def test_wave_metrics_exact_to_empty_frontier(spark, tmp_path):
+    """A crawl that runs until its frontier is empty, the budget binding on
+    the way."""
+    pages = build_pages_df(spark, 2, seed=42)
+    seeds = seed_list(2, seed=42)
+    cfg = CrawlConfig(budget=3, n_buckets=N_BUCKETS, m_bits=M_BITS,
+                      checkpoint_every=3, checkpoint_dir=str(tmp_path / "drain"))
+    res = run_crawl(spark, pages, seeds, cfg)
+    front = _assert_metrics_exact(spark, res, seeds)
+    assert front == []
+    assert any(m["n_deferred"] > 0 for m in res.metrics)
+
+
+@pytest.mark.parametrize("budget", [None, BUDGET])
+def test_seed_dataframe_plan_runs_once(spark, tmp_path, crawl_world, budget):
+    """A caller's seed DataFrame has one consumer, the wave-0 dedup chain,
+    so its plan runs once per crawl: wave 0's n_frontier is observed on
+    that pass, not counted by a job of its own."""
+    import pandas as pd
+
+    seeds = crawl_world["seeds"]
+    calls = spark.sparkContext.accumulator(0)
+
+    def _tag(u):
+        calls.add(1)
+        return u
+
+    tag = F.udf(_tag, "string").asNondeterministic()
+    seed_df = spark.createDataFrame(pd.DataFrame({"url": seeds})).select(
+        tag("url").alias("url"))
+    cfg = CrawlConfig(budget=budget, n_buckets=N_BUCKETS, m_bits=M_BITS,
+                      max_waves=2, checkpoint_dir=str(tmp_path / "seeds"))
+    res = run_crawl(spark, crawl_world["pages"], seed_df, cfg)
+    assert calls.value == len(seeds)
+    assert res.metrics[0]["n_frontier"] == len(seeds)
+
+
+def test_empty_seed_dataframe_writes_nothing(spark, tmp_path, crawl_world):
+    """An empty seed DataFrame stops after wave 0's admit pass: no wave
+    metrics, no logs, no snapshot."""
+    from wss_spark.crawl import checkpoint
+
+    root = str(tmp_path / "empty")
+    cfg = CrawlConfig(budget=BUDGET, n_buckets=N_BUCKETS, m_bits=M_BITS,
+                      checkpoint_dir=root)
+    seed_df = spark.createDataFrame([], "url string")
+    res = run_crawl(spark, crawl_world["pages"], seed_df, cfg)
+    assert res.metrics == [] and res.waves == 0
+    assert checkpoint.latest_snapshot(root) is None
+    assert not checkpoint.has_state(root)
+
+
+def test_resume_from_final_wave_snapshot(spark, tmp_path, crawl_world):
+    """A max_waves-cut crawl commits its last wave once: the wave writes
+    the snapshot itself, off the checkpoint_every cadence, and nothing is
+    compacted for it. Resuming from that snapshot reproduces the
+    uninterrupted crawl: visit order, seen set, per-wave counts, and the
+    same committed seen-store segments as cadence-only compaction."""
+    import json
+    import os
+
+    from wss_spark.crawl import checkpoint
+
+    kw = dict(budget=BUDGET, n_buckets=N_BUCKETS, m_bits=M_BITS,
+              checkpoint_every=3)
+    args = (spark, crawl_world["pages"], crawl_world["seeds"])
+    cut_dir, full_dir = str(tmp_path / "cut"), str(tmp_path / "full")
+    run_crawl(*args, CrawlConfig(max_waves=2, checkpoint_dir=cut_dir, **kw),
+              robots=crawl_world["robots"])
+    snap = checkpoint.latest_snapshot(cut_dir)
+    assert snap.wave == 1 and snap.manifest["frontier_rows"] > 0
+    assert checkpoint.last_compacted_wave(cut_dir) == -1
+
+    resumed = run_crawl(*args, CrawlConfig(checkpoint_dir=cut_dir, **kw),
+                        robots=crawl_world["robots"], resume=True)
+    full = run_crawl(*args, CrawlConfig(checkpoint_dir=full_dir, **kw),
+                     robots=crawl_world["robots"])
+    assert visit_order(resumed.fetch_log) == visit_order(full.fetch_log)
+    assert visit_order(full.fetch_log) == crawl_world["order"]
+    assert ({r[0] for r in resumed.seen.select("canon_url").collect()}
+            == {r[0] for r in full.seen.select("canon_url").collect()})
+    assert ([{k: m[k] for k in ("wave", *COUNT_FIELDS)} for m in resumed.metrics]
+            == [{k: m[k] for k in ("wave", *COUNT_FIELDS)} for m in full.metrics[2:]])
+
+    def segments(root):
+        sr = os.path.join(root, "seen_segments")
+        out = {}
+        for e in sorted(os.listdir(sr)):
+            mf = os.path.join(sr, e, "_SEG_COMMIT.json")
+            if os.path.exists(mf):
+                with open(mf) as f:
+                    out[e] = json.load(f)["zones"]
+        return out
+
+    assert segments(full_dir)  # the crawl is long enough to compact
+    assert segments(cut_dir) == segments(full_dir)
+
+
+def test_wave_job_floor(spark, tmp_path, crawl_world):
+    """The per-wave Spark job floor of a budgeted 2-wave crawl (snapshot
+    cadence 2), each wave in its own job group opened from ``on_wave``.
+    A wave must not pay a job just to count rows it has written: counts
+    ride on the writes as observations. Budgets per group, each job named
+    (a shuffle or broadcast stage under adaptive execution runs as a job
+    of its own):
+
+    wave 0 (19)
+      7  admit: the admitted cache via the in-wave dedup and both
+         per-host rank windows (shuffle stages + the count)
+      4  entities write: the url-partitioned pages cache, the fetch join
+         and the extraction
+      2  fetch-log write: the status join and the write
+      1  seen-key append (one flat file)
+      5  snapshot: the admitted-key broadcast of the deferred anti-join,
+         the frontier write, the bloom update's two shuffle stages and
+         its write
+    wave 1 (21)
+      5  probe range collect over the persisted bloom-flagged candidates
+      5  admit: the exact seen anti-join and the rank windows
+      2  entities write (the pages cache exists now)
+      2  fetch-log write
+      1  seen-key append
+      6  the last wave's snapshot, written once: the wave-0 items plus the
+         exact anti-join feeding the deferred branch
+    tail (3)
+      1  metrics-log write
+      2  the caller's fetch_log.count()
+    """
+    import uuid
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    groups: list[str] = []
+
+    def open_group(label: str) -> None:
+        groups.append(f"floor-{tag}-{label}")
+        sc.setJobGroup(groups[-1], label)
+
+    cfg = CrawlConfig(budget=2, max_waves=2, checkpoint_every=2,
+                      n_buckets=N_BUCKETS, m_bits=M_BITS,
+                      checkpoint_dir=str(tmp_path / "floor"))
+    open_group("w0")
+    try:
+        res = run_crawl(spark, crawl_world["pages"], crawl_world["seeds"], cfg,
+                        on_wave=lambda m: open_group(f"w{m['wave'] + 1}"))
+        res.fetch_log.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
+    assert len(jobs) == 3  # two waves and the tail
+    assert jobs[0] <= 19 and jobs[1] <= 21 and jobs[2] <= 3, jobs

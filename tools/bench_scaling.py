@@ -18,7 +18,7 @@ Modes:
   Compute-dominated → the honest parallel-efficiency measurement.
 - bulkprof mode (`bulkprof` argv): bulk with CrawlConfig.profile_phases —
   forces materialization at sub-phase boundaries so the admit/discover
-  walls can be ATTRIBUTED (p_frontier_count/p_dedup_bloom/p_seen_anti/
+  walls can be ATTRIBUTED (p_dedup_bloom/p_seen_anti/
   p_fetch_log/p_seen_write/p_discover). The forcing changes execution;
   never report bulkprof walls as the scaling headline.
 - stages mode (`stages` argv): times each pipeline constituent SEPARATELY on

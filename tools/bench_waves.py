@@ -33,8 +33,10 @@ def main() -> None:
     from wss_spark.session import get_spark
     from wss_spark.synth import build_pages_df, seed_list
 
-    spark = get_spark(app_name="wss_waves", master="local[32]",
-                      shuffle_partitions=32)
+    # one task slot per core this process may run on
+    nproc = len(os.sched_getaffinity(0))
+    spark = get_spark(app_name="wss_waves", master=f"local[{nproc}]",
+                      shuffle_partitions=nproc)
     spark.sparkContext.setLogLevel("ERROR")
     pages = build_pages_df(spark, n_targets, seed=42).persist()
     pages.count()

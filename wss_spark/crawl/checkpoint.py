@@ -45,7 +45,7 @@ import re
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from wss_spark.fsutil import atomic_json_marker
@@ -61,12 +61,39 @@ class Snapshot:
     manifest: dict
 
 
+def observe_count(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` plus an Observation of its row count, filled by the first
+    action that runs the returned frame: a count that rides on a write or
+    materialization the caller runs anyway instead of costing a Spark job
+    of its own. Read it (``obs.get["n"]``) only after such an action —
+    ``get`` blocks until one has run."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def observed_count(obs: Observation) -> int | None:
+    """``obs.get["n"]``, or None when the action that completed ``obs`` no
+    longer held the observed node in its final plan. That happens to a
+    node below a cached or shuffled stage: adaptive execution drops a
+    finished stage whose consumer came out empty, and the observation
+    completes with an empty row. A node at the root of a write or a
+    ``localCheckpoint`` cannot be dropped."""
+    if obs._jo.getRow().size() == 0:
+        return None
+    return obs.get["n"]
+
+
 def write_snapshot(root: str, wave: int, frontier: DataFrame,
                    bloom: DataFrame, stats: dict) -> Snapshot:
+    """Commit the state a resume needs. The manifest also records
+    ``frontier_rows``, the frontier's row count observed on its write, so
+    neither the next wave nor a resume counts it again."""
     d = _wave_dir(root, wave)
+    frontier, rows = observe_count(frontier)
     frontier.write.mode("overwrite").parquet(os.path.join(d, "frontier"))
     bloom.write.mode("overwrite").parquet(os.path.join(d, "bloom"))
-    manifest = {"wave": wave, "committed_at": time.time(), **stats}
+    manifest = {"wave": wave, "committed_at": time.time(), **stats,
+                "frontier_rows": rows.get["n"]}
     atomic_json_marker(os.path.join(d, "_COMMIT.json"), manifest)  # commit point
     return Snapshot(wave, manifest)
 
@@ -94,7 +121,11 @@ def latest_snapshot(root: str) -> Snapshot | None:
     return best
 
 
-def read_state(spark: SparkSession, root: str, wave: int):
+def read_state(spark: SparkSession, root: str, wave: int,
+               frontier_schema=None, filter_schema=None):
+    """(frontier, filter state) of the snapshot at ``wave``. Pass the
+    schemas when the caller holds them (it just wrote the snapshot):
+    schema inference costs one Spark job per frame."""
     d = _wave_dir(root, wave)
     # the live filter-state dir is named by the commit manifest
     # ("filter_dir", default the historical "bloom" — it holds whichever
@@ -106,9 +137,13 @@ def read_state(spark: SparkSession, root: str, wave: int):
         with open(mf) as f:
             fdir = json.load(f).get("filter_dir", "bloom")
     return (
-        spark.read.parquet(os.path.join(d, "frontier")),
-        spark.read.parquet(os.path.join(d, fdir)),
+        _reader(spark, frontier_schema).parquet(os.path.join(d, "frontier")),
+        _reader(spark, filter_schema).parquet(os.path.join(d, fdir)),
     )
+
+
+def _reader(spark: SparkSession, schema=None):
+    return spark.read if schema is None else spark.read.schema(schema)
 
 
 def swap_filter_state(root: str, snap: Snapshot, state: DataFrame) -> Snapshot:
@@ -593,16 +628,14 @@ def read_log_wave(spark: SparkSession, root: str, name: str, wave: int,
     wave (zero parsed rows) reads back as an empty frame instead of
     failing schema inference."""
     d = os.path.join(root, "logs", name, f"wave={wave:05d}")
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(d)
+    return _reader(spark, schema).parquet(d)
 
 
 def read_log(spark: SparkSession, root: str, name: str,
-             up_to_wave: int | None = None) -> DataFrame | None:
+             up_to_wave: int | None = None, schema=None) -> DataFrame | None:
     """Union of committed per-wave log dirs (≤ the resumed snapshot's wave,
-    so logs from an uncommitted, crashed wave are ignored)."""
+    so logs from an uncommitted, crashed wave are ignored). ``schema``
+    skips the inference job when the caller holds the log's schema."""
     log_root = os.path.join(root, "logs", name)
     if not os.path.isdir(log_root):
         return None
@@ -616,4 +649,4 @@ def read_log(spark: SparkSession, root: str, name: str,
         dirs.append(os.path.join(log_root, entry))
     if not dirs:
         return None
-    return spark.read.parquet(*dirs)
+    return _reader(spark, schema).parquet(*dirs)

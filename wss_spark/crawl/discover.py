@@ -29,6 +29,7 @@ at a time (scan-until-empty has a true sequential dependency).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -226,9 +227,15 @@ def search_window_urls(spark, keyword: str, start_time: str, end_time: str,
 
 
 def seeds_to_frontier(spark, seed_urls: list[str], priority: float = 0.0) -> DataFrame:
-    """Seed list (config order, O4) → wave-0 frontier DataFrame."""
-    rows = [(u, i) for i, u in enumerate(seed_urls)]
-    df = spark.createDataFrame(rows, "url string, seed_order long")
+    """Seed list (config order, O4) → wave-0 frontier DataFrame. Built
+    from pandas so the rows reach the JVM as one Arrow batch: a list of
+    tuples goes through a pickled Python RDD, a Python-worker round trip
+    every time the plan runs."""
+    pdf = pd.DataFrame({
+        "url": pd.Series(seed_urls, dtype=object),
+        "seed_order": pd.Series(range(len(seed_urls)), dtype="int64"),
+    })
+    df = spark.createDataFrame(pdf, "url string, seed_order long")
     return _finish(
         df.select(
             "url",
@@ -246,13 +253,12 @@ def seeds_frontier_from_df(seeds: DataFrame, priority: float = 0.0) -> DataFrame
     the driver. All seeds share seed_order 0 — ordering falls through to the
     canon_url tiebreak, still a pure function of data.
 
-    Contract (ADVICE r04 #2): this is a LAZY projection, and wave 0 has two
-    consumers, so the caller's seed plan executes twice — it must be cheap
-    and deterministic (a parquet projection is; a sample()/limit() is NOT:
-    re-execution could admit a different set than the counted one). For an
-    expensive or nondeterministic seed plan set
-    ``CrawlConfig.materialize_seeds=True``, which eager-localCheckpoints
-    wave 0 once instead."""
+    Contract: this is a LAZY projection with one consumer, the wave-0
+    dedup chain, so the caller's seed plan executes once per crawl. Wave
+    0's ``n_frontier`` is observed on that same pass (``DataFrame.observe``)
+    rather than counted by a job of its own, so an expensive seed plan is
+    not re-run and a nondeterministic one (``sample``/``limit``) cannot
+    report a different frontier than the one admitted from."""
     return _finish(
         seeds.select(
             "url",

@@ -30,6 +30,7 @@ import time
 from dataclasses import dataclass, field
 from datetime import datetime
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -98,16 +99,6 @@ class CrawlConfig:
     # seen-store small-file maintenance on the snapshot cadence (see
     # checkpoint.compact_seen_keys); off only for write-cost experiments
     compact_seen: bool = True
-    # eager-localCheckpoint wave 0 when seed_urls is a DataFrame (ADVICE
-    # r04 #2): wave 0 has two consumers (the count and the dedup chain), so
-    # a caller-supplied seed PLAN executes twice — fine for the documented
-    # contract (cheap + deterministic, e.g. a parquet projection like the
-    # bulk bench's pages.select("url")), wrong for an expensive or
-    # nondeterministic one (sample/limit could make n_frontier inconsistent
-    # with the admitted set). Default False: materializing the bulk bench's
-    # multi-million-row wave 0 would re-add the exact cache-build wall the
-    # r04 persist removal attributed and fixed (12.1 s @ 2 cores).
-    materialize_seeds: bool = False
     # waves with ≤ this many newly-seen keys append as ONE bucket-sorted
     # flat file (L0) instead of a bucket-partitioned directory — the
     # bucketed write of a small wave costs ~10× the flat one, and
@@ -312,14 +303,14 @@ def run_crawl(
         checkpoint.reset_state(root)
     def _seed_frontier() -> DataFrame:
         if isinstance(seed_urls, DataFrame):
-            f = seeds_frontier_from_df(seed_urls)
-            if cfg.materialize_seeds:
-                f = f.localCheckpoint(eager=True)
-            return f
+            return seeds_frontier_from_df(seed_urls)
         return seeds_to_frontier(spark, seed_urls)
 
+    n_seeds = None if isinstance(seed_urls, DataFrame) else len(seed_urls)
     if snap is not None:
         frontier, bloom_state = checkpoint.read_state(spark, root, snap.wave)
+        # None for a manifest written before the field existed
+        n_frontier = snap.manifest.get("frontier_rows")
         # the state schemas differ (bitmap vs table+stash): a resume under
         # the wrong seen_filter must fail loudly, not probe garbage bytes
         want = "table" if cfg.seen_filter == "cuckoo" else "bitmap"
@@ -337,6 +328,8 @@ def run_crawl(
             # any earlier generation visited are filtered by the carried
             # bloom + seen store exactly like intra-crawl re-discoveries.
             frontier = frontier.unionByName(_seed_frontier())
+            n_frontier = (None if None in (n_frontier, n_seeds)
+                          else n_frontier + n_seeds)
         wave = snap.wave + 1
         # exact seen = union of committed per-wave key appends ≤ the snapshot
         # wave; stale appends from a crashed wave > snap.wave are ignored
@@ -345,6 +338,7 @@ def run_crawl(
         metrics: list[dict] = []
     else:
         frontier = _seed_frontier()
+        n_frontier = n_seeds
         bloom_state = _filter_empty()
         wave = 0
         last_seen_wave = -1
@@ -355,27 +349,37 @@ def run_crawl(
     bloom_is_empty = snap is None
 
     fetch_log_parts: list[DataFrame] = []
+    # the end-of-run log read-backs reuse the schemas of the frames this
+    # run wrote (inference would cost a job per log)
+    log_schemas: dict = {}
     last_committed = wave - 1
+    snapshot_wave = None  # wave of the last snapshot this run committed
     # max_waves bounds THIS run's waves: absolute for fresh/resume (a resumed
     # crawl finishes under the same cap as the uninterrupted one), relative
     # for a continue_seen generation (each generation gets its own allowance
     # — wave numbers grow without bound across generations by design)
     max_wave = wave + cfg.max_waves if continue_seen else cfg.max_waves
+    # the frontier's size is never counted by a job of its own: a wave's
+    # next frontier is observed on the commit that materializes it (step
+    # 9). The first wave of a run takes it from the seed list's length
+    # and the snapshot manifest, or — DataFrame seeds — observes it on its
+    # own admit pass (frontier_obs below).
     while wave < max_wave:
         t0 = time.time()
+        if n_frontier == 0:
+            break
         # NO frontier.persist() here: every wave's frontier is already
         # materialized upstream (wave 0: a projection of the caller's pages/
         # seeds frame; wave > 0: the eager localCheckpoint or the snapshot
-        # parquet from step 9), so its two consumers (this count + the dedup
-        # chain feeding the persisted ``flagged``) re-scan cheap materialized
-        # data. An extra persist re-serialized the whole frontier into the
-        # block manager once per wave — measured 12.1 s (2 cores) / 4.5 s
-        # (8 cores) of the wave-0 bulk wall, scaling at 0.67 (BASELINE.md
-        # round-4 attribution) — the local-mode cache-build pitfall the
-        # extraction path already avoids.
-        n_frontier = frontier.count()
-        if n_frontier == 0:
-            break
+        # parquet from step 9), and its one consumer is the dedup chain
+        # feeding the admit cache. An extra persist re-serialized the whole
+        # frontier into the block manager once per wave — measured 12.1 s
+        # (2 cores) / 4.5 s (8 cores) of the wave-0 bulk wall, scaling at
+        # 0.67 (BASELINE.md round-4 attribution) — the local-mode
+        # cache-build pitfall the extraction path already avoids.
+        frontier_obs = None
+        if n_frontier is None:
+            frontier, frontier_obs = checkpoint.observe_count(frontier)
 
         phase_t: dict[str, float] = {}
 
@@ -385,8 +389,6 @@ def run_crawl(
             since[0] = now_t
 
         _since = [t0]
-        if cfg.profile_phases:
-            _mark("p_frontier_count", _since)
 
         # 1. in-wave dedup + salted hash/bucket columns
         cand = bloom.with_hash_cols(
@@ -491,6 +493,20 @@ def run_crawl(
             )
         admitted = admitted.persist()
         n_admitted = admitted.count()
+        if frontier_obs is not None:
+            # the admit pass ran the observed frontier (into the persisted
+            # candidates or the admit cache itself); an empty first wave
+            # stops here, before anything is written
+            n_frontier = checkpoint.observed_count(frontier_obs)
+            if n_frontier is None:
+                # the admit pass's final plan lost the observed frontier (a
+                # later stage came out empty): count it after all
+                n_frontier = frontier.count()
+            if n_frontier == 0:
+                for df in (flagged, admitted, blocked):
+                    if df is not None:
+                        df.unpersist()
+                break
         _mark("admit", _since)
 
         # 5. "fetch": join against the url-partitioned pages cache. The html
@@ -507,9 +523,9 @@ def run_crawl(
         ok = fetched.filter(F.col("html").isNotNull()).select(
             "url", "html", "seed_order", "priority", F.col("page").alias("_src_page")
         )
-        parsed_plan = parse_pages(
+        parsed_plan, entities_obs = checkpoint.observe_count(parse_pages(
             ok, cfg.now, passthrough=["seed_order", "priority", "_src_page"]
-        )
+        ))
         # Materialize the extraction ONCE as this wave's entities log and
         # read it back. discover() fans out into ~10 union branches over
         # `parsed`, so the Arrow extraction (the wave's dominant cost) must
@@ -522,10 +538,11 @@ def run_crawl(
         # column-pruned. The per-wave write is also exactly the Iceberg
         # entities append the durable path needs anyway.
         checkpoint.write_log(root, "entities", wave, parsed_plan)
+        log_schemas["entities"] = parsed_plan.schema
         parsed = checkpoint.read_log_wave(
             spark, root, "entities", wave, schema=parsed_plan.schema
         )
-        n_parsed = parsed.count()
+        n_parsed = entities_obs.get["n"]
         _mark("extract", _since)
 
         # fetch log: every parsed url has exactly one kind='page' row, so a
@@ -564,6 +581,7 @@ def run_crawl(
             fetch_log_parts.append(fetch_log.persist())
         else:
             checkpoint.write_log(root, "fetch_log", wave, fetch_log)
+            log_schemas["fetch_log"] = fetch_log.schema
         if cfg.profile_phases:
             if cfg.defer_logs:
                 fetch_log_parts[-1].count()  # force: status join + cache
@@ -591,12 +609,13 @@ def run_crawl(
         if n_admitted + n_blocked > 0:
             bloom_is_empty = False
 
-        # 8. discover next wave; deferred rows re-enter unchanged
-        n_deferred = 0
+        # 8. discover next wave; deferred rows re-enter unchanged. Both
+        # sizes are observed on the step-9 commit — the deferred branch is
+        # not persisted: its one consumer is that commit.
         next_frontier = discover(parsed)
+        deferred_obs = None
         if deferred is not None:
-            deferred = deferred.persist()
-            n_deferred = deferred.count()
+            deferred, deferred_obs = checkpoint.observe_count(deferred)
             next_frontier = deferred.select(
                 *[f.name for f in frontier.schema.fields]
             ).unionByName(next_frontier)
@@ -609,14 +628,21 @@ def run_crawl(
         # 9. snapshot every ``checkpoint_every`` waves (write + read back,
         # truncating DataFrame lineage so plans never grow across waves);
         # in-between waves just persist — lineage depth stays bounded by the
-        # snapshot cadence. The exact seen set is NOT rewritten here — it is
+        # snapshot cadence. The last wave ``max_waves`` allows snapshots
+        # off the cadence too: its state is written once here instead of
+        # being checkpointed and then written again by the terminal
+        # snapshot. The exact seen set is NOT rewritten here — it is
         # already durable via the per-wave key append (step 7).
-        if wave % cfg.checkpoint_every == 0:
-            checkpoint.write_snapshot(
+        on_cadence = wave % cfg.checkpoint_every == 0
+        if on_cadence or wave == max_wave - 1:
+            n_next = checkpoint.write_snapshot(
                 root, wave, next_frontier, bloom_next,
                 {"n_frontier": n_frontier, "n_admitted": n_admitted},
+            ).manifest["frontier_rows"]
+            next_frontier, bloom_next = checkpoint.read_state(
+                spark, root, wave, next_frontier.schema, bloom_next.schema
             )
-            next_frontier, bloom_next = checkpoint.read_state(spark, root, wave)
+            snapshot_wave = wave
             # seen-store maintenance on the snapshot cadence: merge the
             # uncompacted wave dirs ≤ this committed snapshot into one
             # segment (one file per bucket) so the per-wave exact anti-join
@@ -625,7 +651,7 @@ def run_crawl(
             # checkpoint.compact_seen_keys). Safe w.r.t. resume: a segment
             # commits only after its covering snapshot, wave dirs are never
             # deleted, and compaction cost is O(window), never O(total).
-            if cfg.compact_seen:
+            if on_cadence and cfg.compact_seen:
                 c_lo = checkpoint.last_compacted_wave(root) + 1
                 if wave > c_lo:
                     checkpoint.compact_seen_keys(spark, root, c_lo, wave)
@@ -636,8 +662,11 @@ def run_crawl(
             # and Catalyst analysis time explodes after a few waves. Both
             # states here are O(wave) (frontier) / O(n_buckets) (bloom) —
             # nothing cumulative is rewritten.
+            next_frontier, next_obs = checkpoint.observe_count(next_frontier)
             next_frontier = next_frontier.localCheckpoint(eager=True)
             bloom_next = bloom_next.localCheckpoint(eager=True)
+            n_next = next_obs.get["n"]
+        n_deferred = deferred_obs.get["n"] if deferred_obs is not None else 0
         last_committed = wave
         _mark("discover_state", _since)
 
@@ -662,8 +691,6 @@ def run_crawl(
 
         if flagged is not None:
             flagged.unpersist()
-        if deferred is not None:
-            deferred.unpersist()
         if not cfg.defer_logs:
             # deferred fetch logs (defer_logs=True) are lazy unions over the
             # admitted AND blocked caches — both must stay alive until the
@@ -682,26 +709,25 @@ def run_crawl(
         # max_waves), so the loop ticks on instead of stopping
         if n_admitted == 0 and n_frontier > 0 and not hb_has_periods:
             break
+        n_frontier = n_next
         wave += 1
 
-    # terminal snapshot so a completed (or max_waves-cut) crawl resumes from
-    # its true final state even off the snapshot cadence
-    if metrics and (metrics[-1]["wave"] % cfg.checkpoint_every != 0):
+    # terminal snapshot so a completed crawl resumes from its true final
+    # state even off the snapshot cadence (a max_waves-cut crawl already
+    # wrote it in its last wave)
+    if metrics and snapshot_wave != metrics[-1]["wave"]:
         checkpoint.write_snapshot(
             root, metrics[-1]["wave"], frontier, bloom_state,
             {"n_frontier": -1, "n_admitted": metrics[-1]["n_admitted"]},
         )
     if metrics:
+        # through Arrow: a list of tuples would go through a pickled
+        # Python RDD and a Python-worker round trip
+        cols = [c.split()[0] for c in _METRICS_SCHEMA.split(", ")]
         checkpoint.write_log(
             root, "metrics", metrics[-1]["wave"],
-            spark.createDataFrame(
-                [
-                    (m["wave"], m["n_frontier"], m["n_new"], m["n_admitted"],
-                     m["n_deferred"], m["n_entities"], m["wall_s"])
-                    for m in metrics
-                ],
-                _METRICS_SCHEMA,
-            ),
+            spark.createDataFrame(pd.DataFrame(metrics, columns=cols),
+                                  _METRICS_SCHEMA),
         )
 
     # the fetch index is dead on either branch: deferred fetch-log parts are
@@ -715,10 +741,16 @@ def run_crawl(
         for part in fetch_log_parts[1:]:
             fetch_log_all = fetch_log_all.unionByName(part)
     else:
-        fetch_log_all = checkpoint.read_log(spark, root, "fetch_log", up_to_wave=last_committed)
+        fetch_log_all = checkpoint.read_log(
+            spark, root, "fetch_log", up_to_wave=last_committed,
+            schema=log_schemas.get("fetch_log"),
+        )
     # entities are parquet-backed per wave either way (the extraction's
     # materialization point doubles as the log)
-    entities_all = checkpoint.read_log(spark, root, "entities", up_to_wave=last_committed)
+    entities_all = checkpoint.read_log(
+        spark, root, "entities", up_to_wave=last_committed,
+        schema=log_schemas.get("entities"),
+    )
     seen_all = (
         checkpoint.read_seen_keys(spark, root, last_seen_wave)
         if last_seen_wave >= 0
